@@ -8,11 +8,12 @@ the engine, as scripts/run_pipeline.py is for the parse side):
 Chain: deterministic corpus -> tokenize (mapInPandas, broadcast vocab)
 -> exact sequence dedup on token fingerprints (census form: survivor +
 n_tok ride one aggregate) -> temperature mixing plan (printed) ->
-shard-partitioned parquet write via sharding.write_shards (manifest
-aggregated from the in-hand frame, one corpus scan) -> data-loader
-resume position for a sample checkpoint.  Every stage is the same code
-the oracle-gated queries run; this script exists so the whole chain is
-exercisable under spark-submit on a real cluster.
+shard-partitioned parquet write via sharding.write_shards (input
+stored once at entry and read by every pass, so it is evaluated once;
+manifest aggregated from the written assignment, not a re-read) ->
+data-loader resume position for a sample checkpoint.  Every stage is the
+same code the oracle-gated queries run; this script exists so the whole
+chain is exercisable under spark-submit on a real cluster.
 """
 
 from __future__ import annotations

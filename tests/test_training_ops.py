@@ -782,6 +782,88 @@ def test_shard_writer_roundtrip(spark, tmp_path):
     assert len(dirs) == len(manifest)
 
 
+def test_write_shards_verify_empty_frame(spark, tmp_path):
+    """An empty corpus writes no parquet files; the verify=True audit
+    must read that back as empty (not fail to infer a schema) and
+    return the empty manifest."""
+    from ulp_spark.operators import sharding
+
+    empty = spark.createDataFrame(
+        [], "doc_id string, tokens array<int>, n_tok int")
+    mdf = sharding.write_shards(empty, str(tmp_path / "shards"), verify=True)
+    assert mdf.collect() == []
+    assert dict(mdf.dtypes)["shard"] == "bigint"
+
+
+def test_write_shards_evaluates_input_once(spark, tmp_path):
+    """write_shards stores its input once at entry: the prefix sum's
+    pre-passes, the write and the manifest all read that copy, so a lazy
+    input (here a Python UDF counting its calls) is evaluated exactly
+    once per row — on the local-checkpoint seam tier."""
+    from pyspark.sql.types import IntegerType
+
+    from ulp_spark.operators import sharding
+
+    assert spark.sparkContext.getCheckpointDir() is None
+    calls = spark.sparkContext.accumulator(0)
+
+    def n_tok(i):
+        calls.add(1)
+        return i % 97 + 1
+
+    n = 2_000
+    df = spark.range(0, n, 1, 4).select(
+        F.format_string("d-%05d", F.col("id")).alias("doc_id"),
+        F.udf(n_tok, IntegerType())(F.col("id")).alias("n_tok"))
+    # verify=True: the manifest must still equal the re-read output's
+    mdf = sharding.write_shards(df, str(tmp_path / "shards"),
+                                shard_tokens=8 * 1024, verify=True)
+    rows = mdf.collect()
+    assert calls.value == n
+    assert sum(r.n_seqs for r in rows) == n
+    assert sum(r.n_tokens for r in rows) == sum(i % 97 + 1 for i in range(n))
+    assert len(rows) > 1
+
+
+def test_pack_chain_writes_every_survivor_once(spark, tmp_path):
+    """The token-packing chain end to end: exact dedup -> pack_bins ->
+    pack_sequences -> write_shards(order_col="bin_id", verify=True).
+    The written rows, split back out along doc_starts, must hold exactly
+    the survivors' token arrays, each once."""
+    from collections import Counter
+
+    from ulp_spark import fixtures
+    from ulp_spark.operators import packing, sharding, tokens
+
+    base = fixtures.sequences(spark, 300).select("doc_id", "tokens", "n_tok")
+    # four in ten documents again under a new id: exact duplicates
+    dups = base.filter(F.substring("doc_id", -1, 1).isin("0", "3", "6", "9")) \
+        .withColumn("doc_id", F.concat(F.lit("dup-"), "doc_id"))
+    seq = base.unionByName(dups)
+    surv = seq.groupBy(
+        tokens.token_fingerprint(F.col("tokens")).alias("fp")
+    ).agg(F.min("doc_id").alias("doc_id"), F.min("n_tok").alias("n_tok"))
+    assign = packing.pack_bins(surv.select("doc_id", "n_tok"),
+                               capacity=512, buckets=8)
+    packed = packing.pack_sequences(seq, assign)
+    path = str(tmp_path / "shards")
+    man = sharding.write_shards(packed, path, order_col="bin_id",
+                                shard_tokens=16 * 1024, verify=True).collect()
+
+    want = Counter({tuple(r.tokens) for r in seq.collect()})
+    want_tok = sum(len(t) for t in want)
+    assert sum(r.n_tokens for r in man) == want_tok
+    assert len(man) > 1
+    rows = spark.read.parquet(path).select("tokens", "doc_starts").collect()
+    assert sum(len(r.tokens) for r in rows) == want_tok
+    got = Counter()
+    for r in rows:
+        ends = list(r.doc_starts[1:]) + [len(r.tokens)]
+        for st, en in zip(r.doc_starts, ends):
+            got[tuple(r.tokens[st:en])] += 1
+    assert got == want
+
+
 def test_token_fingerprint_collides_only_on_equal_arrays(spark):
     from ulp_spark.operators import tokens
 

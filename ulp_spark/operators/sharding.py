@@ -40,18 +40,23 @@ def shard_assign(
         "shard", F.floor(F.col("tok_offset") / shard_tokens).cast("bigint"))
 
 
-def shard_manifest(
-    df: DataFrame, order_col: str = "doc_id", len_col: str = "n_tok",
-    shard_tokens: int = SHARD_TOKENS,
-) -> DataFrame:
-    """One row per shard: (shard, n_seqs, n_tokens, first_doc, last_doc)."""
-    assigned = shard_assign(df, order_col, len_col, shard_tokens)
+def _manifest_agg(assigned: DataFrame, order_col: str, len_col: str
+                  ) -> DataFrame:
     return assigned.groupBy("shard").agg(
         F.count(F.lit(1)).alias("n_seqs"),
         F.sum(F.col(len_col).cast("bigint")).alias("n_tokens"),
         F.min(order_col).alias("first_doc"),
         F.max(order_col).alias("last_doc"),
     )
+
+
+def shard_manifest(
+    df: DataFrame, order_col: str = "doc_id", len_col: str = "n_tok",
+    shard_tokens: int = SHARD_TOKENS,
+) -> DataFrame:
+    """One row per shard: (shard, n_seqs, n_tokens, first_doc, last_doc)."""
+    return _manifest_agg(shard_assign(df, order_col, len_col, shard_tokens),
+                         order_col, len_col)
 
 
 def shard_manifest_sql(
@@ -75,16 +80,6 @@ def shard_manifest_sql(
     """
 
 
-def _manifest_agg(assigned: DataFrame, order_col: str, len_col: str
-                  ) -> DataFrame:
-    return assigned.groupBy("shard").agg(
-        F.count(F.lit(1)).alias("n_seqs"),
-        F.sum(F.col(len_col).cast("bigint")).alias("n_tokens"),
-        F.min(order_col).alias("first_doc"),
-        F.max(order_col).alias("last_doc"),
-    )
-
-
 def write_shards(
     df: DataFrame, path: str, order_col: str = "doc_id",
     len_col: str = "n_tok", shard_tokens: int = SHARD_TOKENS,
@@ -97,18 +92,22 @@ def write_shards(
     directory (file-size hygiene at 100 TB: a trainer wants many
     mid-sized files per shard, not one monolith per task).
 
-    The returned manifest is aggregated from the SAME ``assigned`` frame
-    that was written (VERDICT/ADVICE r3: the old default re-read the
-    written parquet — a full second scan of the corpus per shard write,
-    and partition-column inference downcast ``shard`` to int).  The
-    ``assigned`` frame is seam-materialized before the write so the
-    manifest aggregation reuses its materialized blocks instead of
-    recomputing the prefix sum — one corpus scan total.  ``verify=True``
-    additionally re-reads the written output and raises if its manifest
-    differs (post-write audit: pay the second scan only when asked), with
-    ``shard`` cast back to bigint so the schemas compare equal.
+    The input is seam-materialized once at entry, so it is evaluated
+    exactly once: the prefix sum's pre-passes (row count, boundary
+    sample, per-bucket totals), the partitioned write and the manifest
+    aggregate all read that one stored copy instead of each rebuilding a
+    lazy input (for a packed corpus: the packing UDF, the id join and the
+    token-payload groupBy).  The manifest aggregate reads only its narrow
+    columns from that copy, so no second copy of the token arrays is
+    stored, and it comes from the same assignment that was written, not
+    from a re-read of the output.  ``verify=True`` additionally re-reads
+    the written output with the written schema (``shard`` stays bigint,
+    and an empty corpus reads back as empty) and raises if its manifest
+    differs — a post-write audit that pays the second scan only when
+    asked.
     """
-    assigned = seam(shard_assign(df, order_col, len_col, shard_tokens))
+    df = seam(df)
+    assigned = shard_assign(df, order_col, len_col, shard_tokens)
     (
         assigned.write.mode("overwrite")
         .option("maxRecordsPerFile", max_records_per_file)
@@ -117,8 +116,7 @@ def write_shards(
     )
     manifest = _manifest_agg(assigned, order_col, len_col)
     if verify:
-        written = df.sparkSession.read.parquet(path) \
-            .withColumn("shard", F.col("shard").cast("bigint"))
+        written = df.sparkSession.read.schema(assigned.schema).parquet(path)
         audit = _manifest_agg(written, order_col, len_col)
         diff = manifest.exceptAll(audit).union(audit.exceptAll(manifest))
         bad = diff.limit(1).collect()
